@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Json
+
 /** Driver-run benchmark: executes every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
   *
@@ -63,13 +65,13 @@ object Bench {
       loadFactor: Double, contended: Boolean, sfDir: String,
       escalatedJson: String, failedJson: String, partial: Boolean,
       artifact: String): String = {
-    val qsCompact = results.map { case (k, v) => s"\"" + k + "\":" + r4(v) }
+    val qsCompact = results.map { case (k, v) => Json.quote(k) + ":" + r4(v) }
       .mkString("{", ",", "}")
     s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qsCompact,""" +
-      s""""sf":"$sfDir","total_norm":${r4(total / normDivisor)},""" +
+      s""""sf":${Json.quote(sfDir)},"total_norm":${r4(total / normDivisor)},""" +
       s""""load_factor":${r4(loadFactor)},"contended":$contended,""" +
       s""""escalated":$escalatedJson,"failed":$failedJson,""" +
-      s""""partial":$partial,"artifact":"$artifact"}"""
+      s""""partial":$partial,"artifact":${Json.quote(artifact)}}"""
   }
 
   /** Fixed-work single-thread canary: seconds to xxh64-chain 2e8 longs.
@@ -330,7 +332,7 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] compile bench failed: $e"); "null"
       }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, v) => Json.quote(k) + ":" + v }
       .mkString("{", ",", "}")
     // canary-normalized per-query times: raw seconds divided by the
     // window's load_factor, so round-over-round comparisons can separate
@@ -343,17 +345,18 @@ object Bench {
     // after normalization is the calibration constant's own drift.
     val normDivisor = math.max(loadFactor, 1.0)
     val qsNorm = results
-      .map { case (k, v) => s"\"" + k + "\":" + (if (v < 0) v else v / normDivisor) }
+      .map { case (k, v) => Json.quote(k) + ":" + (if (v < 0) v else v / normDivisor) }
       .mkString("{", ",", "}")
-    val esc = escalated.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val esc = escalated.map(Json.quote).mkString("[", ",", "]")
     // failed queries report -1 per entry but must not SUBTRACT from the
     // headline total (a broken query would read as a round-over-round
     // improvement); they are excluded from the sum and listed explicitly
     val failed = results.collect { case (k, v) if v < 0 => k }
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map(Json.quote).mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        s""""sf":${Json.quote(sfDir)},""" +
         s""""canary_before_sec":$canaryBefore,"canary_after_sec":$canaryAfter,""" +
         s""""canary_mt_before_sec":$canaryMtBefore,"canary_mt_after_sec":$canaryMtAfter,""" +
         s""""canary_idle_calib_sec":$CanaryIdleCalibSec,""" +
@@ -372,15 +375,15 @@ object Bench {
         // per-query rep spread (max/min) — rows > 1.3 are variance-prone
         // and should be read as min-of-N, never single-sourced
         s""""queries_spread":${spreads.map { case (k, v) =>
-          "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
+          Json.quote(k) + ":" + v }.mkString("{", ",", "}")},""" +
         // shuffle-scratch disk pressure, self-describing (r13 ask #5)
         s""""disk_free_before_bytes":$diskFreeBefore,""" +
         s""""disk_free_after_bytes":${scratchFreeBytes(spark)},""" +
         s""""queries_disk_free_bytes":${diskFree.map { case (k, v) =>
-          "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
+          Json.quote(k) + ":" + v }.mkString("{", ",", "}")},""" +
         s""""partial":${only.isDefined || skip.nonEmpty},""" +
-        s""""only":${only.getOrElse(Seq.empty).map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""skip":${skip.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""only":${only.getOrElse(Seq.empty).map(Json.quote).mkString("[", ",", "]")},""" +
+        s""""skip":${skip.map(Json.quote).mkString("[", ",", "]")},""" +
         s""""compile":$compileJson}"""
     // The FAT self-describing artifact goes to the SPARK_GRAFT_BENCH_OUT
     // file ONLY (it grew to hundreds of KB of per-query disk/spread maps,

@@ -2014,14 +2014,14 @@ object Dedup {
           count(lit(1))).collect().head
         Seq(m.getLong(0), m.getLong(1))
       }
-      // dial-memoized (one measurement job per (plan, JVM)): on a hit the
-      // payload size is known, so the persist (which served the
+      // dial-memoized (one measurement job per (plan, input files)): on a
+      // hit the payload size is known, so the persist (which served the
       // measurement + the final join) and the job are both skipped — the
       // final join is the plan's only consumer and computes the changed
       // set inside the action
       val side =
         if (DialMemo.solved(changed0, "para.reassembly", Nil)) {
-          val m = DialMemo.sizes(changed0, "para.reassembly", Nil)(measureChanged(changed0))
+          val m = DialMemo(changed0, "para.reassembly", Nil)(measureChanged(changed0))
           log.info(s"reassembleFromPositions: changed_docs=${m(1)} " +
             s"kept_positions=${m(0)} (broadcast bound $broadcastMaxPositions, memo)")
           if (m(0) <= broadcastMaxPositions) broadcast(changed0)
@@ -2029,7 +2029,7 @@ object Dedup {
         } else {
           val changed = changed0
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val m = DialMemo.sizes(changed0, "para.reassembly", Nil)(measureChanged(changed))
+          val m = DialMemo(changed0, "para.reassembly", Nil)(measureChanged(changed))
           log.info(s"reassembleFromPositions: changed_docs=${m(1)} " +
             s"kept_positions=${m(0)} (broadcast bound $broadcastMaxPositions)")
           // the measurement above was the only in-function action; the first

@@ -723,15 +723,15 @@ object TextOps {
     // the quadratic join runs, so a 100 TB run cannot silently pay n² —
     // it either fits the declared ceiling or stops with the dials named.
     // Cost: one fingerprint scan + a map-combinable agg — O(n), paid once
-    // PER (index plan, JVM): the volume is a pure function of the index,
-    // so re-constructions (bench reps, winnow_auto after winnow_overlap,
-    // pipeline chains) reuse the DialMemo-recorded count instead of
-    // re-scanning the corpus. maxCandidatePairs <= 0 disables (audit-scale
-    // escape hatch, deliberate and in writing).
+    // PER (index plan, input files): the volume is a pure function of the
+    // index, so re-constructions (bench reps, winnow_auto after
+    // winnow_overlap, pipeline chains) reuse the DialMemo-recorded count
+    // instead of re-scanning the corpus. maxCandidatePairs <= 0 disables
+    // (audit-scale escape hatch, deliberate and in writing).
     if (maxCandidatePairs > 0) {
       // n·(n−1) summed as LONG (SQL `/` would promote to double), halved
       // exactly in Scala — n·(n−1) is always even
-      val vol = DialMemo.sizes(inv0, "winnow.guard", Nil) {
+      val vol = DialMemo(inv0, "winnow.guard", Nil) {
         Seq(inv.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
           .agg(coalesce(sum(col("__n") * (col("__n") - 1)), lit(0L)))
           .collect().head.getLong(0) / 2)
@@ -798,8 +798,8 @@ object TextOps {
       wFloor: Int = 4,
   ): DataFrame = {
     // the corpus size feeding the solver is a dial input too — one count
-    // job per (docs plan, JVM), not per construction
-    val n = DialMemo.sizes(docs.select(col(idCol)), "corpus.n", Nil) {
+    // job per (docs plan, input files), not per construction
+    val n = DialMemo(docs.select(col(idCol)), "corpus.n", Nil) {
       Seq(docs.select(col(idCol)).count())
     }.head
     val (w, ms) = winnowConfigFor(n, candidateBudget, minShared, wFloor)
@@ -1002,7 +1002,6 @@ object TextOps {
       k: Int = 8,
       minDocs: Int = 2,
       broadcastMaxPositions: Long = 32000000L,
-      persistIndex: Boolean = false,
   ): DataFrame = {
     require(minDocs >= 2, "minDocs < 2 would remove every document's every span")
     graft.functions.GraftFunctions.register(docs.sparkSession)
@@ -1015,24 +1014,16 @@ object TextOps {
     // here keeps the two paths' df semantics identical (a null-id row is
     // a data defect, not a document; its own text is never span-edited
     // either way because the final id-equijoin can't match a null key)
-    val inv0 = docs
+    // the index is consumed twice at plan-construction time (the df-gate
+    // aggregation, then the starts build) and recomputed by each: caching
+    // the (id,pos,h) longs across the two passes MEASURED A WASH on local
+    // disk (r14/spanfix.log: 40.2/235.8 s vs 45.9/222.0 baseline at
+    // sf100/sf300 — the cache write cancels the saved shingle+hash pass).
+    // ProbeSpanCost showed the row's real super-linear stage is the
+    // df-gate aggregation — see the repartition note below.
+    val inv = docs
       .filter(col(idCol).isNotNull)
       .select(col(idCol), posexplode(shingleHashes).as(Seq("__pos", "__h")))
-    // the index is consumed twice at plan-construction time (the df-gate
-    // aggregation, then the starts build); persistIndex caches the
-    // (id,pos,h) longs across the two passes, freed in-function after the
-    // second. MEASURED A WASH on local disk (r14/spanfix.log: 40.2/235.8 s
-    // vs 45.9/222.0 baseline at sf100/sf300 — the cache write cancels the
-    // saved shingle+hash pass), so the default is false; the dial exists
-    // for deployments where the second scan is genuinely expensive
-    // (remote object storage, compute-priced scans). ProbeSpanCost showed
-    // the row's real super-linear stage is the df-gate aggregation — see
-    // the repartition note below.
-    val measured = broadcastMaxPositions > 0
-    val inv =
-      if (measured && persistIndex)
-        inv0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else inv0
     // document-frequency gate. minDocs = 2 (the default): a hash occurs
     // in >= 2 DISTINCT documents iff min(id) != max(id) over its rows —
     // ONE map-side-combinable aggregation replaces the general path's
@@ -1091,9 +1082,9 @@ object TextOps {
     // (dupHashes as used in the join below, raw persisted frame for the
     // scratch-release arm — the broadcast() hint wraps the plan, and only
     // the unhinted frame matches its CacheManager entry)
-    // dial-memoized (one count job per (plan, JVM)): on a hit the set's
-    // size is already known, so neither the persist (which existed to
-    // serve the count + the semi-join) nor the job runs — the semi-join
+    // dial-memoized (one count job per (plan, input files)): on a hit the
+    // set's size is already known, so neither the persist (which existed
+    // to serve the count + the semi-join) nor the job runs — the semi-join
     // is the plan's only consumer and recomputes it inside the action
     val dupHashesSolved = broadcastMaxPositions > 0 &&
       DialMemo.solved(dupHashes0, "spans.duphash", Nil)
@@ -1102,13 +1093,13 @@ object TextOps {
       else if (dupHashesSolved) {
         // the measure body only runs if a concurrent clear() raced the
         // solved() check — then it recomputes honestly, just unpersisted
-        val n = DialMemo.sizes(dupHashes0, "spans.duphash", Nil)(
+        val n = DialMemo(dupHashes0, "spans.duphash", Nil)(
           Seq(dupHashes0.count())).head
         log.info(s"dedupSpans: dup_hashes=$n (broadcast cutoff $dupHashBroadcastMax, memo)")
         (if (n <= dupHashBroadcastMax) broadcast(dupHashes0) else dupHashes0, None)
       } else {
         val p = dupHashes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = DialMemo.sizes(dupHashes0, "spans.duphash", Nil)(Seq(p.count())).head
+        val n = DialMemo(dupHashes0, "spans.duphash", Nil)(Seq(p.count())).head
         log.info(s"dedupSpans: dup_hashes=$n (broadcast cutoff $dupHashBroadcastMax)")
         (if (n <= dupHashBroadcastMax) broadcast(p) else p, Some(p))
       }
@@ -1135,25 +1126,23 @@ object TextOps {
         // existed to serve the measurement + the final join) and the
         // measurement job are both skipped — the final join is the plan's
         // only consumer of starts and computes it inside the action
-        val m = DialMemo.sizes(starts0, "spans.starts", Nil)(measureStarts(starts0))
+        val m = DialMemo(starts0, "spans.starts", Nil)(measureStarts(starts0))
         log.info(s"dedupSpans: dup_positions=${m(0)} dup_docs=${m(1)} " +
           s"(broadcast bound $broadcastMaxPositions, memo)")
-        // with no construction-time double-pass left, any index/dup-hash
-        // scratch persisted above serves nothing beyond the single caller
-        // action — release in-function rather than leak
-        if (persistIndex) inv.unpersist(blocking = false)
+        // with no construction-time double-pass left, any dup-hash scratch
+        // persisted above serves nothing beyond the single caller action —
+        // release in-function rather than leak
         dupHashesScratch.foreach(_.unpersist(blocking = false))
         (starts0, m(0) <= broadcastMaxPositions)
       } else {
         val p = starts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val m = DialMemo.sizes(starts0, "spans.starts", Nil)(measureStarts(p))
+        val m = DialMemo(starts0, "spans.starts", Nil)(measureStarts(p))
         log.info(s"dedupSpans: dup_positions=${m(0)} dup_docs=${m(1)} " +
           s"(broadcast bound $broadcastMaxPositions)")
         // the measure above fully materialized the starts cache, so the
-        // index and the dup-hash set have no consumers left anywhere —
-        // release them NOW, in-function (only starts outlives plan
-        // construction; the first caller action auto-releases it)
-        if (persistIndex) inv.unpersist(blocking = false)
+        // dup-hash set has no consumers left anywhere — release it NOW,
+        // in-function (only starts outlives plan construction; the first
+        // caller action auto-releases it)
         dupHashesScratch.foreach(_.unpersist(blocking = false))
         ScratchCache.arm(docs.sparkSession, p)
         (p, m(0) <= broadcastMaxPositions)

@@ -44,6 +44,17 @@ class BenchLineSpec extends AnyFunSuite {
     assert(mapper.readTree(line).get("queries").size() == 250)
   }
 
+  test("quotes and backslashes in sfDir and query keys are JSON-escaped") {
+    val sf = "C:\\data\\\"sf0.1\""
+    val key = "q_\"odd\"\\name"
+    val line = Bench.compactLine(Seq(key -> 1.5), 1.5, 1.0, 1.0,
+      contended = false, sf, "[]", "[]", partial = false, "out \"x\".json")
+    val node = mapper.readTree(line)
+    assert(node.get("sf").asText() == sf)
+    assert(node.get("queries").get(key).asDouble() == 1.5)
+    assert(node.get("artifact").asText() == "out \"x\".json")
+  }
+
   test("non-finite seconds serialize as -1, keeping the line valid JSON") {
     val results = Seq("q_nan" -> Double.NaN, "q_inf" -> Double.PositiveInfinity)
     val line = Bench.compactLine(results, 0.0, 1.0, 1.0, contended = true,

@@ -69,6 +69,36 @@ class DialMemoSpec extends AnyFunSuite {
     assert(a == b, "memo hit changed paragraphDedup rows")
   }
 
+  test("a rewritten input is re-measured; an unchanged one adds no entries") {
+    DialMemo.clear()
+    val tmp = java.nio.file.Files.createTempDirectory("dial_rewrite").toString
+    val path = s"$tmp/documents.parquet"
+    def spans() = sorted(TextOps.dedupSpans(
+      SparkEntry.t(spark, tmp, "documents"), "text", "doc_id", k = 3))
+    def expected(df: org.apache.spark.sql.DataFrame) =
+      sorted(TextOps.dedupSpans(df, "text", "doc_id", k = 3))
+    docs.coalesce(1).write.parquet(path)
+    val first = spans()
+    val filled = DialMemo.size
+    assert(spans() == first)
+    assert(DialMemo.size == filled, "unchanged input must reuse its dials")
+    // a Spark overwrite: a sixth document repeats the first one's opening
+    val more = docs.union(Seq((6L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"))
+    more.coalesce(1).write.mode("overwrite").parquet(path)
+    val afterSpark = spans()
+    assert(DialMemo.size > filled, "a Spark overwrite must be re-measured")
+    assert(afterSpark == expected(more))
+    // an outside replacement of the same file name
+    val outside = Seq((7L, "one two three four five six seven eight"),
+      (8L, "one two three four five six seven eight")).toDF("doc_id", "text")
+    outside.coalesce(1).write.parquet(s"$tmp/next.parquet")
+    TestdataSpec.replaceOutsideSpark(s"$tmp/next.parquet", path)
+    val sized = DialMemo.size
+    val afterOutside = spans()
+    assert(DialMemo.size > sized, "an outside replacement must be re-measured")
+    assert(afterOutside == expected(outside))
+  }
+
   test("clear() forces a fresh measurement") {
     DialMemo.clear()
     sorted(TextOps.dedupSpans(docs, "text", "doc_id", k = 3))

@@ -961,6 +961,24 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("trainLogisticWeights refuses dim > 512 before any Spark job runs") {
+    graft.functions.GraftFunctions.register(spark)
+    // any job over this frame evaluates the udf and fails with a wrapped
+    // IllegalStateException, so an IllegalArgumentException here can only
+    // come from the argument check ahead of the first job
+    val poison = udf((s: String) =>
+      if (s != null) throw new IllegalStateException("input evaluated") else s)
+    val docs = Seq((0L, "a b c")).toDF("doc_id", "raw")
+      .select($"doc_id", poison($"raw").as("text"))
+    val e = intercept[IllegalArgumentException](
+      Embeddings.trainLogisticWeights(docs, "text", lit(true), dim = 513))
+    assert(e.getMessage.contains("dim <= 512"))
+    // control: dim = 512 passes the check, so its first job trips the udf
+    val ctl = intercept[Exception](
+      Embeddings.trainLogisticWeights(docs, "text", lit(true), dim = 512))
+    assert(!ctl.isInstanceOf[IllegalArgumentException])
+  }
+
   test("semantic dedup: planted tight clusters found via cells, keep-first keeps min id") {
     // two tight clusters of near-identical vectors + isolated noise: the
     // within-cluster pairs sit far above the threshold, the cross-cluster

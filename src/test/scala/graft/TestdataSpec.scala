@@ -44,23 +44,41 @@ class TestdataSpec extends AnyFunSuite {
     assert(n > 0)
   }
 
-  test("table memo pins the first listing; clearTableMemo is the invalidation rule") {
+  test("t() sees a Spark overwrite and an outside file rewrite without clearTableMemo") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("memo_stale").toString
-    Seq((1L, "a")).toDF("id", "v").write.mode("overwrite").parquet(s"$tmp/gen.parquet")
+    val tmp = java.nio.file.Files.createTempDirectory("memo_fresh").toString
+    val gen = s"$tmp/gen.parquet"
+    Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(gen)
     assert(SparkEntry.t(spark, tmp, "gen").count() == 1L)
-    // regenerate the directory with MORE rows: the memo must keep serving
-    // the first listing (write-once invariant) until explicitly cleared —
-    // spark.catalog.refresh* cannot see the private memo
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-      .write.mode("overwrite").parquet(s"$tmp/gen.parquet")
-    val stale = try SparkEntry.t(spark, tmp, "gen").count() catch {
-      // a vanished first-listing file is also an acceptable stale outcome
-      case _: Throwable => -1L
-    }
-    assert(stale != 3L, "memo unexpectedly saw the regenerated directory")
-    SparkEntry.clearTableMemo()
-    assert(SparkEntry.t(spark, tmp, "gen").count() == 3L,
-      "clearTableMemo must force a fresh listing")
+      .coalesce(1).write.mode("overwrite").parquet(gen)
+    assert(SparkEntry.t(spark, tmp, "gen").count() == 3L, "missed a Spark overwrite")
+    // same file name, new bytes, one more column: the listing's length and
+    // mtime change, so the schema is re-inferred as well
+    Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0), (4L, "d", 4.0), (5L, "e", 5.0))
+      .toDF("id", "v", "w").coalesce(1).write.parquet(s"$tmp/next.parquet")
+    TestdataSpec.replaceOutsideSpark(s"$tmp/next.parquet", gen)
+    val replaced = SparkEntry.t(spark, tmp, "gen")
+    assert(replaced.count() == 5L, "missed an outside file replacement")
+    assert(replaced.columns.toSeq == Seq("id", "v", "w"))
+  }
+}
+
+object TestdataSpec {
+
+  /** Overwrite the single data file of parquet directory `dst` in place
+    * with the bytes of `src`'s, as a tool outside Spark would: same file
+    * name, no checksum sidecar.
+    */
+  def replaceOutsideSpark(src: String, dst: String): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    def part(dir: String) =
+      new java.io.File(dir).listFiles().toSeq.filter(_.getName.startsWith("part-")) match {
+        case Seq(f) => f.toPath
+        case fs => throw new IllegalStateException(s"$dir: expected one data file, got $fs")
+      }
+    val target = part(dst)
+    Files.copy(part(src), target, StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc"))
   }
 }
